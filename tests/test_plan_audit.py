@@ -335,10 +335,17 @@ def test_chromosome_skew_does_not_concentrate_partitions(spark):
     ONE chromosome, the annotation path must not funnel the hot
     chromosome through one task.  The binned interval join's key is
     (chrom, bin) — a hot chromosome spreads over its position bins — so
-    even the non-broadcast shuffle path stays balanced, and AQE can
-    split/coalesce what remains.  A chromosome-keyed join would put 90%
-    of rows in one partition; assert the real max partition share stays
-    an order of magnitude below that."""
+    even the non-broadcast shuffle path stays balanced.  A
+    chromosome-keyed join would put 90% of rows in one partition; assert
+    the real max partition share stays well below that.
+
+    The small gene side is under the broadcast threshold, so the planner
+    would broadcast it and the output would follow the spark.range
+    slices (one per core: 0.25 on 4 cores, whatever the join key).  And
+    AQE would coalesce this few-MB shuffle into a single partition.
+    Broadcasting and coalescing are therefore off for this test, with
+    enough shuffle partitions that only the join key decides the share.
+    """
     from pyspark.sql import functions as F
 
     from variant_load_pipeline_spark.operators.interval_join import (
@@ -372,17 +379,34 @@ def test_chromosome_skew_does_not_concentrate_partitions(spark):
         strategy="binned",
         broadcast_intervals=False,  # force the shuffle path: worst case
     )
-    plan = spark._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
-    assert "NestedLoop" not in plan  # equi key even without broadcast
-    counts = [
-        r["count"]
-        for r in out.select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid")
-        .count()
-        .collect()
-    ]
+    scoped = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "32",
+    }
+    saved = {k: spark.conf.get(k, None) for k in scoped}
+    try:
+        for k, v in scoped.items():
+            spark.conf.set(k, v)
+        plan = spark._sc._jvm.PythonSQLUtils.explainString(
+            out._jdf.queryExecution(), "formatted"
+        )
+        assert "NestedLoop" not in plan  # equi key even without broadcast
+        assert "BroadcastHashJoin" not in plan  # the shuffle path really runs
+        counts = [
+            r["count"]
+            for r in out.select(F.spark_partition_id().alias("pid"))
+            .groupBy("pid")
+            .count()
+            .collect()
+        ]
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     total = sum(counts)
     assert total > 10_000  # the join actually produced candidate pairs
     # chromosome-keyed shuffling would give max share ~0.9; binning keeps
@@ -640,3 +664,32 @@ def test_registry_wide_no_unbounded_joins(spark):
         if bad and name not in _ALLOWED_UNBOUNDED_JOINS:
             offenders.append(name)
     assert not offenders, offenders
+
+
+def test_warm_pass_reuses_generated_code(spark):
+    """A session that repeats its plans must not recompile them.  These 10
+    registry queries (the steady registry pass) compile ~190 classes at
+    sf0.001 in a fresh session, more than Spark's default 100-entry
+    codegen LRU, so under that default the second pass cycles the cache
+    and recompiles nearly all of them.  get_spark sizes the cache to the
+    registry's working set, so the second pass compiles nothing."""
+    names = [
+        "q1_pricing_summary", "j1_interval_overlap", "j4_dedup_upsert_ids",
+        "zygosity_snv", "a5_alleles_per_position", "w6_first_match_wins",
+        "c13_translate", "j6_j8_transcript_features",
+        "s3_s4_vcf_field_parse", "p29_annotate_chunked",
+    ]
+    reg = Q.registry()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def one_pass() -> int:
+        before = compiles.getCount()
+        for name in names:
+            reg[name].spark_fn(spark, SF).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        return compiles.getCount() - before
+
+    one_pass()
+    assert one_pass() == 0

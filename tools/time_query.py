@@ -1,7 +1,10 @@
 """Time individual registry queries in isolation (guide §1.4): noop sink,
 fresh plan per repeat, median + all runs printed.  Mirrors bench.py's
 protocol (EAGER_CONSTRUCT queries time construction too) so isolated
-numbers are comparable with group-bench numbers.
+numbers are comparable with group-bench numbers.  Each repeat also prints
+how many classes Janino compiled during it (Spark's CodegenMetrics), so a
+cold run (compiles > 0) and a warm run (0) are told apart without a
+profiler.
 
 Usage:  PYTHONPATH=/root/repo python tools/time_query.py q1 q2 ... \
             [--sf DIR] [--repeats N] [--plan]
@@ -45,6 +48,9 @@ def main() -> None:
     spark = get_spark(app_name="vlp-time-query")
     reg = Q.registry()
 
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
     def materialize(df) -> None:
         df.write.format("noop").mode("overwrite").save()
 
@@ -56,10 +62,11 @@ def main() -> None:
         if name not in reg:
             print(f"{name}: NOT IN REGISTRY")
             continue
-        runs = []
+        runs, compiled = [], []
         for r in range(repeats):
             spark.sparkContext.setJobDescription(f"{name} rep{r}")
             spark.catalog.clearCache()  # mirror bench.py's repeat hygiene
+            c0 = compiles.getCount()
             if name in EAGER_CONSTRUCT:
                 t0 = time.time()
                 df = reg[name].spark_fn(spark, sf_dir)
@@ -68,8 +75,9 @@ def main() -> None:
                 t0 = time.time()
             materialize(df)
             runs.append(round(time.time() - t0, 3))
+            compiled.append(compiles.getCount() - c0)
         med = round(statistics.median(runs), 3)
-        print(f"{name}: median={med} runs={runs}")
+        print(f"{name}: median={med} runs={runs} compiles={compiled}")
         if want_plan:
             df = reg[name].spark_fn(spark, sf_dir)
             print(df._sc._jvm.PythonSQLUtils.explainString(

@@ -147,7 +147,7 @@ def allele_count(alt: Column) -> Column:
     return F.size(F.split(alt, ","))
 
 
-# -- C7/C8: per-allele read count & ACGT pivot ------------------------------
+# -- C7/C8: per-allele read count -----------------------------------------
 def allele_read_count(ad_array: Column, alleles: Column, allele: Column) -> Column:
     """AD value matched to `allele` by its position in [ref]+alts.
 
@@ -155,25 +155,6 @@ def allele_read_count(ad_array: Column, alleles: Column, allele: Column) -> Colu
     """
     idx = F.array_position(alleles, allele)
     return F.when(idx > 0, F.element_at(ad_array, idx.cast("int"))).otherwise(F.lit(0))
-
-
-def acgt_counts(ad_array: Column, alleles: Column) -> dict[str, Column]:
-    """count_a/c/g/t = read count of that literal allele (0 if absent).
-
-    Parity: VcfToCommonFormat2Converter.java:294-297.
-    """
-    return {
-        f"count_{b.lower()}": F.coalesce(
-            allele_read_count(ad_array, alleles, F.lit(b)), F.lit(0)
-        )
-        for b in "ACGT"
-    }
-
-
-# -- C9: 8-col refNuc depth imputation --------------------------------------
-def ref_depth_imputed(dp: Column, ac_array: Column) -> Column:
-    """depth_ref = DP - sum(AC); parity Vcf8ColToCommonFormat2Converter.java:175-200."""
-    return dp - F.aggregate(ac_array, F.lit(0), lambda acc, x: acc + x)
 
 
 # -- C12: reverse complement ------------------------------------------------

@@ -56,6 +56,13 @@ def spread(df: DataFrame) -> DataFrame:
     """Scale-adaptive parallelism fix-up (guide §2.4/§2.5): round-robin
     repartition ONLY when the scan under-parallelizes the session.
 
+    Apply it directly to a shuffle-free scan or projection.  The probe
+    reads ``df.rdd.getNumPartitions()``.  On a plan that already contains
+    a shuffle, that call finalizes the adaptive plan, which runs the
+    shuffle stages at query construction, and the count it returns is the
+    post-shuffle one, not the scan's.  On a ``createDataFrame`` of local
+    rows (already ``defaultParallelism`` slices) it is a no-op.
+
     The single-file local fixtures scan as 1 task, so CPU-heavy derivations
     (shingling, hashing, per-row media decode) previously forced an
     unconditional ``repartition(defaultParallelism)`` — which on a real
@@ -1869,8 +1876,10 @@ def emb_hashing_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import dot, hash_embed
 
     emb = hash_embed(
-        load(spark, sf_dir, "documents"), dim=_HE_DIM, sign_bit=_HE_SIGN_BIT
-    ).transform(spread)
+        load(spark, sf_dir, "documents").transform(spread),
+        dim=_HE_DIM,
+        sign_bit=_HE_SIGN_BIT,
+    )
     nrm2 = dot(F.col("embedding"), F.col("embedding"))
     q = emb.filter(F.col("doc_id") % 50 == 0).select(
         F.col("doc_id").alias("qid"),

@@ -58,6 +58,16 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # Whole-stage codegen cache (an LRU, static conf, default 100).
+        # One pass of the steady pipeline needs more distinct generated
+        # classes than that (strain load 117, the 10-query registry pass
+        # 189), so repeating the same plans cycled the LRU and recompiled
+        # 90-183 classes with Janino per pass, which HotSpot then JITs
+        # again.  All 268 registry queries compile 3,765-3,935 classes at
+        # sf0.001 (two censuses); bench.py's HEADLINE group needs ~259 and
+        # HEADLINE_V2 ~1,225, so 1024 would still thrash.  4096 holds the
+        # whole registry; warm passes then compile nothing.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # local mode runs ALL executor threads inside the driver JVM, so
         # the driver heap IS the cluster memory: size it for the host
         # (32 threads in 8g spends long sessions in GC; a 250-query
